@@ -14,8 +14,16 @@ parquet-backed tables under a warehouse dir, with the same schemas
 - `latest_status_per_source`: the signature ROW_NUMBER dedup (:228-237).
 - `has_succeeded`: resume-skip check (`check_conditions`, :435-468).
 
-Control tables are tiny; reads collect to the driver by design (the data
-plane never does).
+Control tables are tiny, so the protocol runs driver-side with ZERO Spark
+jobs: appends go through `txn.append_rows`, lookups (`next_etl_date`,
+`successful_tasks`, `has_succeeded`, `all_sources_green`) filter the rows
+`txn.read_rows` returns, and the date queue's read-modify-writes
+(`claim_next_date`, `mark_date`) publish with the locked
+`txn._overwrite_rows_locked` while holding the table flock. Through Spark
+each of these cost a job's scheduling latency (~0.3-2 s on a 4-core
+host); on pyarrow they cost milliseconds with the same atomicity. `read()` and
+`latest_status_per_source()` still return DataFrames for the report and
+housekeeping roll-ups (the data plane never collects).
 """
 
 from __future__ import annotations
@@ -27,7 +35,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators.core import first_by, latest_per_key
+from .operators.core import latest_per_key
 
 ETL_DATES_SCHEMA = (
     "etl_date string, holiday_flag int, status string, current_date_flag int"
@@ -50,7 +58,7 @@ def _now() -> datetime:
     return datetime.now(timezone.utc).replace(tzinfo=None)
 
 
-def _arrow_table(rows: list[tuple], schema: str):
+def arrow_table(rows: list[tuple], schema: str):
     """Build a pyarrow Table matching a Spark DDL schema string — the
     driver-side fast-append representation. Timestamps become
     timestamp[us, UTC] so Spark reads them as TIMESTAMP (LTZ), type-
@@ -94,17 +102,17 @@ class Ledger:
     def _path(self, table: str) -> str:
         return os.path.join(self.dir, table)
 
-    def _exists(self, table: str) -> bool:
-        from .sources import parquet_table_exists
-
-        return parquet_table_exists(self._path(table))
-
     def read(self, table: str, schema: str) -> DataFrame:
+        """A control table as a DataFrame (empty with `schema` when absent)
+        for the report and housekeeping roll-ups. Built from the
+        driver-side rows, so even a many-file ledger table launches no
+        Spark file-listing job."""
         from .sources import txn
 
-        if self._exists(table):
-            return txn.read(self.spark, self._path(table))
-        return self.spark.createDataFrame([], schema)
+        try:
+            return self.spark.createDataFrame(txn.read_rows(self._path(table)))
+        except FileNotFoundError:
+            return self.spark.createDataFrame([], schema)
 
     def append(self, table: str, df: DataFrame) -> None:
         from .sources import txn
@@ -121,35 +129,38 @@ class Ledger:
         from .sources import txn
 
         with self._lock:
-            txn.append_rows(self._path(table), _arrow_table(rows, schema))
+            txn.append_rows(self._path(table), arrow_table(rows, schema))
 
-    def overwrite(self, table: str, df: DataFrame) -> None:
+    def overwrite(self, table: str, rows: list[tuple], schema: str) -> None:
+        """Driver-side atomic replacement of a control table's rows — no
+        Spark job (txn.overwrite_rows)."""
         from .sources import txn
 
         with self._lock:
-            # manifest-pointer commit: safe even when df's plan reads the
-            # table's live version (the old version dir stays until the
-            # pointer flips), so no driver-side materialization needed
-            txn.commit(df, self._path(table))
+            txn.overwrite_rows(self._path(table), arrow_table(rows, schema))
+
+    def rows(self, table: str) -> list[dict]:
+        """A control table's live rows as dicts ([] when absent) — the
+        driver-side read (txn.read_rows, no Spark job) every lookup below
+        filters."""
+        from .sources import txn
+
+        try:
+            return txn.read_rows(self._path(table)).to_pylist()
+        except FileNotFoundError:
+            return []
 
     # -- etl_dates queue ---------------------------------------------------
     def seed_dates(self, dates: list[tuple]) -> None:
         """Seed the date queue: rows (etl_date, holiday_flag, status,
         current_date_flag)."""
-        self.overwrite(
-            "etl_dates", self.spark.createDataFrame(dates, ETL_DATES_SCHEMA)
-        )
+        self.overwrite("etl_dates", dates, ETL_DATES_SCHEMA)
 
     def next_etl_date(self) -> str | None:
         """Earliest non-holiday, not-yet-processed date
         (utlis/etl_manager.py:48-53: WHERE holiday_flag = 0 AND status IS
         NULL ORDER BY etl_date LIMIT 1)."""
-        df = self.read("etl_dates", ETL_DATES_SCHEMA)
-        picked = first_by(
-            df.filter((F.col("holiday_flag") == 0) & F.col("status").isNull()),
-            ["etl_date"],
-        ).collect()
-        return picked[0].etl_date if picked else None
+        return _next_open(self.rows("etl_dates"))
 
     def claim_next_date(self) -> str | None:
         """Atomically pick the next unprocessed date AND mark it 'running'
@@ -161,62 +172,42 @@ class Ledger:
 
         path = self._path("etl_dates")
         with self._lock, txn.table_lock(path):
-            if not txn.table_exists(path):
+            try:
+                tbl = txn.read_rows(path)
+            except FileNotFoundError:
                 return None
-            df = txn.read(self.spark, path)
-            picked = first_by(
-                df.filter(
-                    (F.col("holiday_flag") == 0) & F.col("status").isNull()
-                ),
-                ["etl_date"],
-            ).collect()
-            if not picked:
+            etl_date = _next_open(tbl.to_pylist())
+            if etl_date is None:
                 return None
-            etl_date = picked[0].etl_date
-            out = df.withColumn(
-                "status",
-                F.when(
-                    F.col("etl_date") == etl_date, F.lit("running")
-                ).otherwise(F.col("status")),
-            ).withColumn(
-                "current_date_flag",
-                F.when(F.col("etl_date") == etl_date, F.lit(1)).otherwise(
-                    F.lit(0)
-                ),
-            )
             # keep_versions=4 on hot control tables: claim/mark commits can
             # land in quick succession from a second driver, and a reader
             # pinned to an older manifest must still find its files
-            txn._commit_locked(out, path, keep_versions=4)
+            txn._overwrite_rows_locked(
+                path, _with_date_status(tbl, etl_date, "running"),
+                keep_versions=4,
+            )
             return etl_date
 
     def mark_date(self, etl_date: str, status: str) -> None:
         """UPDATE etl_dates SET status, current_date_flag
         (utlis/etl_manager.py:319-337).
 
-        The whole read→transform→commit holds the table flock: two driver
+        The whole read→edit→publish holds the table flock: two driver
         PROCESSES marking different dates would otherwise interleave
-        read-modify-writes and one update would vanish (the commit itself
+        read-modify-writes and one update would vanish (the publish itself
         is atomic either way — this serializes the read against it)."""
         from .sources import txn
 
         path = self._path("etl_dates")
         with self._lock, txn.table_lock(path):
-            df = (
-                txn.read(self.spark, path)
-                if txn.table_exists(path)
-                else self.spark.createDataFrame([], ETL_DATES_SCHEMA)
+            try:
+                tbl = txn.read_rows(path)
+            except FileNotFoundError:
+                tbl = arrow_table([], ETL_DATES_SCHEMA)
+            txn._overwrite_rows_locked(
+                path, _with_date_status(tbl, etl_date, status),
+                keep_versions=4,
             )
-            out = df.withColumn(
-                "status",
-                F.when(F.col("etl_date") == etl_date, F.lit(status)).otherwise(
-                    F.col("status")
-                ),
-            ).withColumn(
-                "current_date_flag",
-                F.when(F.col("etl_date") == etl_date, F.lit(1)).otherwise(F.lit(0)),
-            )
-            txn._commit_locked(out, path, keep_versions=4)
 
     # -- run protocol ------------------------------------------------------
     def start_run(
@@ -276,46 +267,78 @@ class Ledger:
         when given (the reference's query filters on the dag-id pattern at
         :441-449; without the scope, same-named tasks in sibling DAGs
         poison each other's resume checks)."""
-        df = self.read("status_tasks", STATUS_SCHEMA)
-        cond = (
-            (F.col("source_name") == source_name)
-            & (F.col("task_id") == task_id)
-            & (F.col("etl_date") == etl_date)
-            & (F.col("status") == "success")
+        return any(
+            r["source_name"] == source_name
+            and r["task_id"] == task_id
+            and r["etl_date"] == etl_date
+            and r["status"] == "success"
+            and (dag_id is None or r["dag_id"] == dag_id)
+            for r in self.rows("status_tasks")
         )
-        if dag_id is not None:
-            cond = cond & (F.col("dag_id") == dag_id)
-        return df.filter(cond).limit(1).count() > 0
 
     def successful_tasks(
         self, source_name: str, etl_date: str, dag_id: str
     ) -> set[str]:
         """All task_ids with a success row for (source, dag, date) — ONE
-        ledger scan per DAG run instead of one `has_succeeded` job per
-        task (20 sources x ~15 tasks would otherwise fire ~300 tiny Spark
-        jobs per pipeline run on driver latency alone). Safe as a
-        run-start snapshot: a task never runs twice within one DAG run,
-        so successes written during the run can't affect its own
+        ledger read per DAG run instead of one `has_succeeded` per task.
+        Safe as a run-start snapshot: a task never runs twice within one
+        DAG run, so successes written during the run can't affect its own
         resume-skips."""
-        df = self.read("status_tasks", STATUS_SCHEMA)
-        rows = (
-            df.filter(
-                (F.col("source_name") == source_name)
-                & (F.col("etl_date") == etl_date)
-                & (F.col("dag_id") == dag_id)
-                & (F.col("status") == "success")
-            )
-            .select("task_id")
-            .distinct()
-            .collect()
-        )
-        return {r.task_id for r in rows}
+        return {
+            r["task_id"]
+            for r in self.rows("status_tasks")
+            if r["source_name"] == source_name
+            and r["etl_date"] == etl_date
+            and r["dag_id"] == dag_id
+            and r["status"] == "success"
+        }
 
     def all_sources_green(self, etl_date: str) -> bool:
-        """update_status_etl all-success gate (:219-268)."""
-        statuses = self.latest_status_per_source(etl_date)
-        row = statuses.agg(
-            F.min(F.col("status").isin("success", "skipped").cast("int")).alias("ok"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        return row.n > 0 and row.ok == 1
+        """update_status_etl all-success gate (:219-268): every source's
+        latest master/group row for the date (`latest_status_per_source`'s
+        pick: created_at DESC, then run_id DESC, NULLs last) is success or
+        skipped. A NULL latest status is not green."""
+        latest: dict = {}
+        for r in self.rows("info_by_sources"):
+            if r["etl_date"] != etl_date or r["created_by"] not in ("master", "group"):
+                continue
+            cur = latest.get(r["source_name"])
+            if cur is None or _recency(r) > _recency(cur):
+                latest[r["source_name"]] = r
+        return bool(latest) and all(
+            r["status"] in ("success", "skipped") for r in latest.values()
+        )
+
+
+def _next_open(rows: list[dict]) -> str | None:
+    """The date-queue pick over etl_dates rows: min etl_date with
+    holiday_flag = 0 and status NULL."""
+    open_dates = [
+        r["etl_date"] for r in rows
+        if r["holiday_flag"] == 0 and r["status"] is None
+        and r["etl_date"] is not None
+    ]
+    return min(open_dates) if open_dates else None
+
+
+def _with_date_status(tbl, etl_date: str, status: str):
+    """The etl_dates table `tbl` with `etl_date` set to `status` and made
+    the one current date (current_date_flag 1 there, 0 elsewhere)."""
+    import pyarrow as pa
+
+    rows = tbl.to_pylist()
+    for r in rows:
+        hit = r["etl_date"] == etl_date
+        if hit:
+            r["status"] = status
+        r["current_date_flag"] = int(hit)
+    return pa.Table.from_pylist(rows, schema=tbl.schema)
+
+
+def _recency(r: dict) -> tuple:
+    """Sort key of latest_per_key(created_at, tie_breakers=[run_id]) with
+    DESC NULLS LAST: larger is more recent."""
+    return (
+        r["created_at"] is not None, r["created_at"],
+        r["run_id"] is not None, r["run_id"],
+    )

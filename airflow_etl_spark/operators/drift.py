@@ -4,28 +4,71 @@ The reference's dbt staging layer diffs each source's live schema against
 the staged schema and writes `schemadrift_tablechangedetail` rows
 (columns: run_id, table_name, source_name, column_name, data_type,
 status 'I'|'D', change_date, created_date — utlis/send_email.py:26-49) and a
-per-table `schemadrift_tablechange` flag. Reproduced here as a pure
-DataFrame diff:
+per-table `schemadrift_tablechange` flag. Reproduced here as ONE row diff
+over (table_name, column_name, data_type) tuples:
 
 - 'I' (inserted): column present in the source, absent from the registry.
 - 'D' (deleted): column present in the registry, gone from the source.
 
-Schemas are tiny (control-plane), so both sides are literal DataFrames; the
-comparison itself is the J3/J4 anti-join pair.
+Schemas are control-plane sized, so the diff runs in Python on the driver
+(`detail_rows`, `flag_rows`) — `Pipeline.drift_check` launches no Spark
+job. The DataFrame signatures (`schema_df`, `drift_detail`,
+`drift_flags`) collect their inputs and delegate to the same rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+#: the schema registry: one row per registered (table, column)
+REGISTRY_SCHEMA = "table_name string, column_name string, data_type string"
+DETAIL_SCHEMA = (
+    "run_id string, table_name string, source_name string, "
+    "column_name string, data_type string, status string, "
+    "change_date string, created_date string"
+)
+FLAG_SCHEMA = (
+    "run_id string, table_name string, source_name string, is_updated int"
+)
+
+
+def schema_rows(df: DataFrame, table_name: str) -> list[tuple]:
+    """A DataFrame's schema as (table_name, column_name, data_type) rows —
+    the engine's `information_schema.columns` analog. Reads only the
+    analyzed schema: no Spark job."""
+    return [(table_name, f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
 
 def schema_df(spark: SparkSession, df: DataFrame, table_name: str) -> DataFrame:
-    """A live DataFrame's schema as rows (table_name, column_name, data_type)
-    — the engine's `information_schema.columns` analog."""
-    rows = [(table_name, f.name, f.dataType.simpleString()) for f in df.schema.fields]
-    return spark.createDataFrame(
-        rows, "table_name string, column_name string, data_type string"
-    )
+    """`schema_rows` as a DataFrame."""
+    return spark.createDataFrame(schema_rows(df, table_name), REGISTRY_SCHEMA)
+
+
+def detail_rows(
+    live: list[tuple],
+    registered: list[tuple],
+    run_id: str,
+    source_name: str,
+    change_date: str,
+) -> list[tuple]:
+    """schemadrift_tablechangedetail rows (DETAIL_SCHEMA) for one run: I/D
+    per column, matched on (table_name, column_name). Inserted rows come
+    first, each side in input order."""
+    live_keys = {(t, c) for t, c, _ in live}
+    reg_keys = {(t, c) for t, c, _ in registered}
+    diff = [(t, c, d, "I") for t, c, d in live if (t, c) not in reg_keys]
+    diff += [(t, c, d, "D") for t, c, d in registered if (t, c) not in live_keys]
+    return [
+        (run_id, t, source_name, c, d, st, change_date, change_date)
+        for t, c, d, st in diff
+    ]
+
+
+def flag_rows(detail: list[tuple]) -> list[tuple]:
+    """schemadrift_tablechange rows (FLAG_SCHEMA): one per (run_id,
+    table_name, source_name) with is_updated=1 when any I/D row exists
+    (utlis/send_email.py:43-49)."""
+    return list(dict.fromkeys((r[0], r[1], r[2], 1) for r in detail))
 
 
 def drift_detail(
@@ -35,38 +78,27 @@ def drift_detail(
     source_name: str,
     change_date: str,
 ) -> DataFrame:
-    """schemadrift_tablechangedetail rows for one run: I/D per column."""
-    inserted = source_schema.join(
-        registered_schema.select("table_name", "column_name"),
-        on=["table_name", "column_name"],
-        how="left_anti",
-    ).withColumn("status", F.lit("I"))
-    deleted = registered_schema.join(
-        source_schema.select("table_name", "column_name"),
-        on=["table_name", "column_name"],
-        how="left_anti",
-    ).withColumn("status", F.lit("D"))
-    return (
-        inserted.unionByName(deleted)
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "table_name",
-            F.lit(source_name).alias("source_name"),
-            "column_name",
-            "data_type",
-            "status",
-            F.lit(change_date).alias("change_date"),
-            F.lit(change_date).alias("created_date"),
-        )
+    """`detail_rows` over two schema DataFrames (table_name, column_name,
+    data_type)."""
+    cols = ("table_name", "column_name", "data_type")
+
+    def rows(df):
+        return [tuple(r) for r in df.select(*cols).collect()]
+
+    return source_schema.sparkSession.createDataFrame(
+        detail_rows(
+            rows(source_schema), rows(registered_schema), run_id,
+            source_name, change_date,
+        ),
+        DETAIL_SCHEMA,
     )
 
 
 def drift_flags(detail: DataFrame) -> DataFrame:
-    """schemadrift_tablechange: one row per table with is_updated=1 when any
-    I/D row exists (utlis/send_email.py:43-49)."""
-    return (
-        detail.groupBy("run_id", "table_name", "source_name")
-        .agg(F.lit(1).alias("is_updated"))
+    """`flag_rows` over a drift-detail DataFrame."""
+    keys = detail.select("run_id", "table_name", "source_name").collect()
+    return detail.sparkSession.createDataFrame(
+        flag_rows([tuple(r) for r in keys]), FLAG_SCHEMA
     )
 
 

@@ -28,7 +28,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession, functions as F
 
 from . import vault
-from .ledger import Ledger
+from .ledger import Ledger, arrow_table
 from .operators import drift
 from .operators.core import anti_new
 from .operators.checks import PipelineStateError
@@ -131,6 +131,9 @@ class Pipeline:
         import threading
 
         self._drift_lock = threading.Lock()
+        # source DataFrames memoised for the duration of one `run` (see
+        # _source_df); None outside a run
+        self._src_frames: dict | None = None
 
     # -- physical table helpers -------------------------------------------
     def _tpath(self, schema: str, table: str) -> str:
@@ -141,6 +144,21 @@ class Pipeline:
 
     def _read(self, schema: str, table: str):
         return read_table(self.spark, self._tpath(schema, table))
+
+    def _source_df(self, table: str):
+        """The source table `sf_dir/<table>.parquet` as a DataFrame, read
+        ONCE per `run` and shared by stage_table, drift_check and the
+        record/content checks: every `spark.read.parquet` launches a
+        schema-inference job, and the files cannot change within a run.
+        Outside a run (and across runs — the files in sf_dir may change
+        between dates) every call reads afresh."""
+        frames = self._src_frames
+        df = frames.get(table) if frames is not None else None
+        if df is None:
+            df = self.spark.read.parquet(f"{self.sf_dir}/{table}.parquet")
+            if frames is not None:
+                frames[table] = df
+        return df
 
     def _checkpoint(self, run_id: str, name: str, schema: str,
                     source_name: str, etl_date: str) -> None:
@@ -163,7 +181,7 @@ class Pipeline:
         downstream reader's date filter works unchanged."""
         from .sources import txn
 
-        df = self.spark.read.parquet(f"{self.sf_dir}/{table}.parquet")
+        df = self._source_df(table)
         out = df.withColumn("etl_date", F.lit(etl_date)).withColumn(
             "record_source", F.lit(source.name)
         )
@@ -176,67 +194,62 @@ class Pipeline:
         """Compare live source schemas against the registered schema table;
         write schemadrift rows; return True when drift exists (branch C5).
 
+        Driver-side, ZERO Spark jobs: the live schema is the source
+        DataFrame's analyzed `.schema` (the types stage_table writes), the
+        registry is read with `txn.read_rows`, the I/D diff is
+        `drift.detail_rows`, detail and flag rows publish through the
+        ledger's `append_rows`, and the registry through
+        `txn._overwrite_rows_locked`.
+
         The whole read-check-write holds BOTH the in-process lock (thread
         fan-out) and the registry's table flock (a second driver process):
         without the flock, two processes could both take the first-run
         register path and silently swallow each other's registrations."""
         from .sources import txn
 
+        prefix = f"{source.name}__"
+        live = [
+            row
+            for t in source.tables
+            for row in drift.schema_rows(self._source_df(t), prefix + t)
+        ]
         reg_path = self._tpath("operational_metadata", "schema_registry")
         with self._drift_lock, txn.table_lock(reg_path):
-            return self._drift_check_locked(source, run_id, etl_date)
-
-    def _drift_check_locked(
-        self, source: SourceConfig, run_id: str, etl_date: str
-    ) -> bool:
-        reg_path = self._tpath("operational_metadata", "schema_registry")
-        live_parts = [
-            drift.schema_df(
-                self.spark,
-                self.spark.read.parquet(f"{self.sf_dir}/{t}.parquet"),
-                f"{source.name}__{t}",
+            try:
+                all_registered = [
+                    (r["table_name"], r["column_name"], r["data_type"])
+                    for r in txn.read_rows(reg_path).to_pylist()
+                ]
+            except FileNotFoundError:
+                all_registered = []
+            others = [r for r in all_registered if not r[0].startswith(prefix)]
+            registered = [r for r in all_registered if r[0].startswith(prefix)]
+            # no registered rows = THIS source's first sighting (first
+            # run, or another source created the registry): register it,
+            # no drift — the first-run short-circuit is per-source, or
+            # every source after the first gets full false drift on day one
+            detail = (
+                drift.detail_rows(live, registered, run_id, source.name, etl_date)
+                if registered else []
             )
-            for t in source.tables
-        ]
-        live = live_parts[0]
-        for p in live_parts[1:]:
-            live = live.unionByName(p)
-
-        from .sources import txn
-
-        if not self._exists("operational_metadata", "schema_registry"):
-            # first run: register, no drift (lock already held by caller)
-            txn._commit_locked(live, reg_path)
-            return False
-        all_registered = read_table(self.spark, reg_path)
-        registered = all_registered.filter(
-            F.col("table_name").startswith(f"{source.name}__")
-        )
-        if registered.limit(1).count() == 0:
-            # THIS source's first sighting (another source created the
-            # registry): register, no drift — the first-run short-circuit
-            # is per-source, not global, or every source after the first
-            # gets full false drift on day one
-            txn._commit_locked(all_registered.unionByName(live), reg_path)
-            return False
-        detail = drift.drift_detail(live, registered, run_id, source.name, etl_date)
-        n = detail.count()
-        if n:
-            detail.write.mode("append").parquet(
-                self._tpath("operational_metadata", "schemadrift_tablechangedetail")
-            )
-            drift.drift_flags(detail).write.mode("append").parquet(
-                self._tpath("operational_metadata", "schemadrift_tablechange")
-            )
-            # fold the observed schema into the registry so the drift is
-            # reported once (this run) and the next run compares against the
-            # accepted new shape — without this, a table first seen after
-            # initial registration re-flags full drift forever
-            merged = all_registered.filter(
-                ~F.col("table_name").startswith(f"{source.name}__")
-            ).unionByName(live)
-            txn._commit_locked(merged, reg_path)
-        return n > 0
+            if detail:
+                self.ledger.append_rows(
+                    "schemadrift_tablechangedetail", detail, drift.DETAIL_SCHEMA
+                )
+                self.ledger.append_rows(
+                    "schemadrift_tablechange", drift.flag_rows(detail),
+                    drift.FLAG_SCHEMA,
+                )
+            if detail or not registered:
+                # fold the observed schema into the registry so a drift is
+                # reported once (this run) and the next run compares
+                # against the accepted new shape — without this, a table
+                # first seen after initial registration re-flags full
+                # drift forever
+                txn._overwrite_rows_locked(
+                    reg_path, arrow_table(others + live, drift.REGISTRY_SCHEMA)
+                )
+            return bool(detail)
 
     # -- vault -------------------------------------------------------------
     def _load_hub_delta(self, hub_name: str, staged, business_keys,
@@ -448,22 +461,17 @@ class Pipeline:
             HTML and record email_notification rows; actual SMTP delivery is
             a side-effect outside the data plane."""
             from . import report
-            from .sources import txn
 
-            detail = self._read(
-                "operational_metadata", "schemadrift_tablechangedetail"
-            ).filter(F.col("run_id") == ctx.run_id)
-            body = report.to_html_table(
-                detail.select("table_name", "column_name", "data_type", "status")
-                .orderBy("table_name", "column_name")
+            cols = ["table_name", "column_name", "data_type", "status"]
+            detail = sorted(
+                tuple(r[c] for c in cols)
+                for r in self.ledger.rows("schemadrift_tablechangedetail")
+                if r["run_id"] == ctx.run_id
             )
-            rows = report.email_rows(
-                self.spark, ctx.run_id, ctx.etl_date,
-                ["data-team@example.com"], "SCHEMA_DRIFT",
-                f"Schema drift detected: {source.name} {ctx.etl_date}", body,
-            )
-            txn.append(
-                rows, self._tpath("operational_metadata", "email_notification")
+            self._email(
+                ctx.run_id, ctx.etl_date, "SCHEMA_DRIFT",
+                f"Schema drift detected: {source.name} {ctx.etl_date}",
+                report.html_table(detail, cols),
             )
             return "drift notification recorded"
 
@@ -578,6 +586,13 @@ class Pipeline:
         scheduler is thread-safe and interleaves the jobs). Sources are
         independent by construction — disjoint staging/vault tables — and
         the shared ledger serializes its own writes."""
+        self._src_frames = {}  # source frames are read once per run
+        try:
+            return self._run_date(etl_date, max_workers)
+        finally:
+            self._src_frames = None
+
+    def _run_date(self, etl_date: str | None, max_workers: int) -> dict:
         if etl_date is None:
             # atomic pick+mark: two drivers draining one queue cannot
             # claim the same date (C4 idempotency across processes)
@@ -670,9 +685,7 @@ class Pipeline:
         for source in self.sources:
             for t in source.tables:
                 name = f"{source.name}__{t}"
-                src_tables[name] = self.spark.read.parquet(
-                    f"{self.sf_dir}/{t}.parquet"
-                )
+                src_tables[name] = self._source_df(t)
                 tgt_tables[name] = self._read("staging", name).filter(
                     F.col("etl_date") == etl_date
                 )
@@ -696,9 +709,7 @@ class Pipeline:
         for source in self.sources:
             for t in source.tables:
                 name = f"{source.name}__{t}"
-                src_df = self.spark.read.parquet(
-                    f"{self.sf_dir}/{t}.parquet"
-                )
+                src_df = self._source_df(t)
                 tgt_df = self._read("staging", name).filter(
                     F.col("etl_date") == etl_date
                 )
@@ -744,25 +755,35 @@ class Pipeline:
         """Error-email rows from the failed tasks of this date (C6 +
         send_email.py:703-811 error detail)."""
         from . import report
-        from .ledger import STATUS_SCHEMA
 
-        failed = (
-            self.ledger.read("status_tasks", STATUS_SCHEMA)
-            .filter(F.col("etl_date") == etl_date)
-            .filter(~F.col("status").isin("success", "skipped"))
+        cols = ["source_name", "dag_id", "task_id", "status"]
+        failed = sorted(
+            (
+                tuple(r[c] for c in cols)
+                for r in self.ledger.rows("status_tasks")
+                if r["etl_date"] == etl_date
+                and r["status"] not in ("success", "skipped")
+            ),
+            key=lambda r: (r[1] or "", r[2] or ""),
         )
-        body = report.to_html_table(
-            failed.select("source_name", "dag_id", "task_id", "status")
-            .orderBy("dag_id", "task_id")
+        self._email(
+            "root", etl_date, "ETL_ERROR", f"ETL pipeline failed: {etl_date}",
+            report.html_table(failed, cols),
         )
-        rows = report.email_rows(
-            self.spark, "root", etl_date, ["data-team@example.com"],
-            "ETL_ERROR", f"ETL pipeline failed: {etl_date}", body,
-        )
-        from .sources import txn
 
-        txn.append(
-            rows, self._tpath("operational_metadata", "email_notification")
+    def _email(self, run_id: str, etl_date: str, event_type: str,
+               subject: str, body_html: str) -> None:
+        """Record a pending email_notification row (delivery is
+        report.deliver_pending's side effect)."""
+        from . import report
+
+        self.ledger.append_rows(
+            "email_notification",
+            report.email_records(
+                run_id, etl_date, ["data-team@example.com"], event_type,
+                subject, body_html,
+            ),
+            report.EMAIL_SCHEMA,
         )
 
     def run_all(self, max_workers: int = 1, limit: int | None = None) -> dict:

@@ -76,6 +76,14 @@ def to_html_table(df: DataFrame) -> str:
     return df.toPandas().to_html(index=False)
 
 
+def html_table(rows: list[tuple], columns: list[str]) -> str:
+    """`to_html_table` over driver-side rows (no Spark job): the same
+    pandas rendering, so string-column tables come out byte-identical."""
+    import pandas as pd
+
+    return pd.DataFrame(rows, columns=columns).to_html(index=False)
+
+
 def render_template(template: str, replacements: dict[str, str]) -> str:
     """`template.replace('{{key}}', value)` chain (send_email.py:646-650)."""
     out = template
@@ -136,6 +144,28 @@ def deliver_pending(spark, notification_path: str, transport) -> int:
     return len(sent_ids)
 
 
+EMAIL_SCHEMA = (
+    "run_id string, recipient_email string, event_type string, "
+    "status string, email_subject string, email_body string, etl_date string"
+)
+
+
+def email_records(
+    run_id: str,
+    etl_date: str,
+    recipients: list[str],
+    event_type: str,
+    subject: str,
+    body_html: str,
+) -> list[tuple]:
+    """email_notification sink rows (FIXTURES.md §3 shape, EMAIL_SCHEMA),
+    one 'pending' row per recipient."""
+    return [
+        (run_id, r, event_type, "pending", subject, body_html, etl_date)
+        for r in recipients
+    ]
+
+
 def email_rows(
     spark,
     run_id: str,
@@ -145,13 +175,8 @@ def email_rows(
     subject: str,
     body_html: str,
 ) -> DataFrame:
-    """email_notification sink rows (FIXTURES.md §3 shape)."""
-    rows = [
-        (run_id, r, event_type, "pending", subject, body_html, etl_date)
-        for r in recipients
-    ]
+    """`email_records` as a DataFrame."""
     return spark.createDataFrame(
-        rows,
-        "run_id string, recipient_email string, event_type string, "
-        "status string, email_subject string, email_body string, etl_date string",
+        email_records(run_id, etl_date, recipients, event_type, subject, body_html),
+        EMAIL_SCHEMA,
     )

@@ -46,6 +46,14 @@ physical directory:
   files simply read missing columns as NULL — drift absorption
   (reference's dbt+Iceberg staging behavior, SURVEY §1.3) is a metadata
   operation.
+- **A driver-side control plane.** Control tables (the ledger's date
+  queue and run/task rows, the schema registry, schemadrift and email
+  rows) change a few rows at a time. `append_rows`, `read_rows` and
+  `overwrite_rows` serve them with pyarrow against the same manifests:
+  zero Spark jobs, the same atomic publish. A read-modify-write (claim a
+  date, fold the registry) holds the table lock across `read_rows` and
+  `_overwrite_rows_locked`. Control tables never carry delete files, and
+  `read_rows` refuses a manifest that does.
 
 Concurrency / crash model (unchanged from round 2, now portable):
 
@@ -941,7 +949,10 @@ def _file_stats(abs_path: str) -> dict | None:
             name = col.path_in_schema
             if "." in name:
                 continue
-            mn, mx = st.min, st.max
+            try:
+                mn, mx = st.min, st.max
+            except NotImplementedError:  # e.g. Spark's INT96 timestamps
+                continue
             if isinstance(mn, bytes) or isinstance(mx, bytes):
                 continue
             if isinstance(mn, (datetime.date, datetime.datetime)):
@@ -1637,6 +1648,87 @@ def append_rows(path: str, arrow_table, fs=None) -> None:
             )
 
 
+def read_rows(path: str, fs=None):
+    """Driver-side read of a SMALL table's live snapshot into a pyarrow
+    Table — ZERO Spark jobs; the read half of the control-plane fast
+    path (`append_rows`, `overwrite_rows`). On a 4-core host a ledger
+    lookup over a 23-file status table took ~0.3 s as a Spark job and
+    ~30 ms as a pyarrow read of the same files.
+
+    Same snapshot semantics as `read`: the manifest schema is applied, so
+    files written before a schema merge read the new columns as NULL, and
+    column types follow Spark's own arrow mapping (`DataFrame.toArrow`).
+    Raises FileNotFoundError when no table exists and ValueError when the
+    manifest carries delete files — control tables are append/overwrite
+    only, and merge-on-read belongs on the cluster (`read`)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fs = fs or _fs_for(path)
+    ver = _read_pointer(path, fs)
+    if ver is None:
+        if _has_plain_files(path, fs):
+            return pq.read_table(path)  # legacy dir (hive partition discovery)
+        raise FileNotFoundError(f"no table at {path}")
+    m = _load_manifest(path, ver, fs)
+    if m.get("deletes"):
+        raise ValueError(
+            f"{path}: manifest carries delete files; read_rows serves "
+            "append/overwrite control tables only (use read)"
+        )
+    parts = [
+        pq.read_table(pa.BufferReader(fs.read_bytes(_join(path, e["path"]))))
+        for e in m["files"]
+    ]
+    schema = _schema_of(m)
+    if schema is None:  # pre-schema manifest: the files' own union
+        return pa.concat_tables(parts, promote_options="default") if parts else pa.table({})
+    target = to_arrow_schema(schema)
+
+    def conform(t):
+        return pa.Table.from_arrays(
+            [
+                t.column(f.name).cast(f.type) if f.name in t.column_names
+                else pa.nulls(t.num_rows, f.type)
+                for f in target
+            ],
+            schema=target,
+        )
+
+    return pa.concat_tables([conform(t) for t in parts]) if parts else target.empty_table()
+
+
+def overwrite_rows(
+    path: str, arrow_table, keep_versions: int = 2, fs=None
+) -> str:
+    """Driver-side atomic replacement of a SMALL table's contents with
+    `arrow_table` — `commit` minus the Spark job: one parquet file
+    serialized by pyarrow, one manifest published. Returns the new
+    version name."""
+    fs = fs or _fs_for(path)
+    with table_lock(path, fs):
+        return _overwrite_rows_locked(path, arrow_table, keep_versions, fs)
+
+
+def _overwrite_rows_locked(
+    path: str, arrow_table, keep_versions: int = 2, fs=None
+) -> str:
+    """overwrite_rows() body for callers already holding the table lock —
+    a read-modify-write (`read_rows` → edit → publish) that must keep the
+    lock across both ends. Taking it again here would self-deadlock on
+    LocalFS flock."""
+    fs = fs or _fs_for(path)
+    parent = _read_pointer(path, fs)
+    entry = _write_arrow_file(
+        path, f"c-{uuid.uuid4().hex[:8]}", arrow_table, fs
+    )
+    return _publish(
+        path, [entry], _arrow_schema_json(arrow_table), None, fs,
+        keep_versions, parent,
+    )
+
+
 def _write_arrow_file(path: str, rel_dir_tag: str, arrow_table, fs) -> dict:
     """Serialize a small pyarrow table into `_data/<tag>/` atomically and
     return its manifest entry — the shared building block of the
@@ -1932,10 +2024,12 @@ def delete_keys_staged(
         m = _load_manifest(path, ver, fs)
         for e in m["files"]:
             e.setdefault("seq", 0)
-        return _publish(
+        new_ver = _publish(
             path, m["files"], m.get("schema"), m.get("partition_by"), fs,
             keep_versions, ver,
             partition_in_data=m.get("partition_in_data", False),
             deletes=(m.get("deletes") or []) + list(staged["delete_entries"]),
             sort_order=m.get("sort_order"),
         )
+        _release_staged(path, [staged["tag"]], fs)
+        return new_ver

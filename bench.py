@@ -443,40 +443,13 @@ def main() -> None:
             json.dump(payload, f, indent=1)
     except OSError:
         pass  # read-only checkout: the stdout line is still complete
-    # Also snapshot per ROUND (VERDICT r6 #8) so round-over-round
-    # per-query comparison never depends on the driver's truncated
-    # capture: round number read from PROGRESS.jsonl's last line.
-    try:
-        with open(os.path.join(here, "PROGRESS.jsonl")) as f:
-            lines = [ln for ln in f.read().splitlines() if ln.strip()]
-        rnd = json.loads(lines[-1]).get("round")
-        if rnd is not None:
-            with open(
-                os.path.join(here, f"BENCH_detail_r{int(rnd):02d}.json"),
-                "w",
-            ) as f:
-                json.dump(payload, f, indent=1)
-            # r13 (VERDICT r12 #6): ALSO snapshot per (round, cpus) so a
-            # 32-core run's per-lane record survives the driver's 8-core
-            # re-run (r12 lost its 32-core extended detail that way).
-            # Additive: the legacy per-round file above is unchanged.
-            with open(
-                os.path.join(
-                    here,
-                    f"BENCH_detail_r{int(rnd):02d}_c{int(cpus):02d}.json",
-                ),
-                "w",
-            ) as f:
-                json.dump(payload, f, indent=1)
-    except (OSError, ValueError, IndexError, KeyError):
-        pass  # no progress log (standalone checkout): skip the snapshot
     # The driver's capture keeps the TAIL of long output (VERDICT r7 #2:
     # front-loading summary fields saved nothing once the detail line
     # grew past the cap — BENCH_r06/r07 both recorded "parsed": null).
     # So: full detail line first, then a compact summary-only line LAST —
     # whatever truncation happens, the final line survives intact and the
     # driver's JSON parse gets the headline numbers. Full per-extended-
-    # query detail lives in BENCH_detail(_rNN).json either way.
+    # query detail lives in BENCH_detail.json either way.
     print(json.dumps(payload))
     summary = {
         "metric": payload["metric"],
